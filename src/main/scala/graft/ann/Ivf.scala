@@ -158,66 +158,25 @@ final class IvfIndex(
       .take(math.max(1, math.min(nProbe, nCells)))
       .map(_._1)
 
-  /** The np nearest cells per query row as a deterministic expression:
-    * (distance, cell) structs sort by distance then cell index, slice
-    * keeps the np best. Shared by both cell-routed joins so their probe
-    * routing can never diverge. */
-  /** The np nearest cells of a query vector, as array<struct<d, c>>:
-    * every centroid distance comes out of ONE native kernel call
-    * ([[org.apache.spark.sql.graftbridge.CentroidDists]] — the
-    * per-centroid-kernel-call array it replaces blew codegen's method
-    * budget at large nCells and ran interpreted, the assignCell flaw on
-    * the query side), then a k-element struct sort ranks them — tiny,
-    * scalar, and ordered (d asc, c asc) exactly as before. This is the
-    * both-sides-large routing path: at 1M+ query rows the distance work
-    * is the corpus-scale cost, the sort is 256 scalars/row. */
-  private def cellRankExpr(np: Int): Column = {
-    import org.apache.spark.sql.graftbridge.{CentroidDists, ColumnBridge}
-    val dists = ColumnBridge.column(CentroidDists(
-      ColumnBridge.expression(col("qv")), centroids.flatten, centroids.length))
-    slice(array_sort(zip_with(dists,
-      sequence(lit(0), lit(centroids.length - 1)),
-      (d, c) => struct(d.as("d"), c.as("c")))), 1, np)
-  }
-
-  /** qid-deduped queries: duplicate query ids would double-score every
-    * matched corpus row and burn ranks on repeats (a qid names ONE query).
-    * Duplicate qids carrying DIFFERENT vectors are caller error; min(qv)
-    * (lexicographic array order) picks one deterministically, where a
-    * dropDuplicates would keep whichever row a partitioning race surfaced.
-    * Shared by both cell-routed joins. */
-  private def dedupedQueries(queries: DataFrame, qId: String,
-      qVec: String): DataFrame =
-    queries.select(col(qId).as("qid"), col(qVec).as("qv"))
-      .groupBy("qid").agg(min(col("qv")).as("qv"))
-
   /** Batch k-NN JOIN through the cells — the both-sides-large path that
-    * [[graft.dedup.Dedup.topKJoin]]'s broadcast shape can't take: each
-    * query row is assigned its `nProbe` nearest cells by a DISTRIBUTED
-    * argmin over the (small, expression-inlined) centroid set, exploded to
-    * (cell, query) rows, and joined to the cell-partitioned corpus on
-    * `cell` — a co-partitioned shuffle join, no query broadcast, no
-    * all-pairs product; matched volume is |queries|·nProbe·(corpus/nCells)
-    * on average. nProbe = nCells ⇒ every pair is scored ⇒ exactly the
-    * exhaustive join (the correctness gate); smaller nProbe trades recall
-    * for a nProbe/nCells scan fraction (recall pinned in IvfSpec).
-    * Returns (qid, cid, sim, rank) ranked by closeness under the index's
-    * metric, ties on cid. */
+    * [[graft.dedup.Dedup.topKJoin]]'s broadcast shape can't take: pairs
+    * come from the IVF cell probe ([[TwoPhaseTopK.cellProbe]]), so matched
+    * volume is |queries|·nProbe·(corpus/nCells) on average. nProbe =
+    * nCells ⇒ every pair is scored ⇒ exactly the exhaustive join (the
+    * correctness gate); smaller nProbe trades recall for a nProbe/nCells
+    * scan fraction (recall pinned in IvfSpec). Returns (qid, cid, sim,
+    * rank) ranked by closeness under the index's metric, ties on cid. */
   def topKJoin(queries: DataFrame, qId: String, qVec: String, k: Int,
       nProbe: Int): DataFrame = {
-    val np = math.max(1, math.min(nProbe, nCells))
-    val probed = dedupedQueries(queries, qId, qVec)
-      .withColumn("_p", explode(cellRankExpr(np)))
-      .select(col("qid"), col("qv"), col("_p.c").as("cell"))
-    // a corpus row lives in exactly one cell and (qid, cell) probes are
-    // distinct, so no match can appear twice. Ranking goes through the
-    // bounded per-task fold ([[BoundedTopK]]), NEVER a window sort of the
-    // exploded match table — that shape cost 22x wall at 10x queries and
-    // is the measured query-side cliff (ScaleJoin, SCALE.md round 13).
-    val scored = probed.join(cells, "cell")
-      .select(col("qid"), col("id"),
-        Similarity.closeness(metric, col("key"), col("qv")).as("_c"))
-    val top = BoundedTopK.topK(scored, "qid", "id", "_c", k)
+    val scored = TwoPhaseTopK.cellProbe(this, queries, qId, qVec, nProbe)
+      .pairs(Seq(col("qv")), Seq(col("cv")))
+      .select(col("qid"), col("cid"),
+        Similarity.closeness(metric, col("cv"), col("qv")).as("_c"))
+    // ranking goes through the bounded per-task fold ([[BoundedTopK]]),
+    // NEVER a window sort of the exploded match table — that shape cost
+    // 22x wall at 10x queries and is the measured query-side cliff
+    // (ScaleJoin, SCALE.md round 13)
+    val top = BoundedTopK.topK(scored, "qid", "cid", "_c", k)
     // similarityValue == closeness for the similarity metrics and its
     // exact negation for the distance ones (closeness = -distance, the
     // same kernel) — no winner re-scoring needed
@@ -232,18 +191,18 @@ final class IvfIndex(
 
   /** Label-filtered hard-negative mining inside probed cells — the
     * both-sides-large arm of [[Negatives.hardNegatives]] (that one
-    * broadcasts a bounded query side; here queries cell-route and
-    * shuffle-join the cell-partitioned corpus, so a million-anchor mining
-    * run needs no broadcast and no all-pairs product). Requires (a) a
-    * cosine index and (b) the label stored as a PAYLOAD COLUMN of the
-    * cells table — at cluster scale labels live beside the vectors in
-    * the cell-partitioned parquet; joining a corpus-sized label table per
+    * broadcasts a bounded query side; here pairs come from the IVF cell
+    * probe, so a million-anchor mining run needs no broadcast and no
+    * all-pairs product; the miner tail is shared). Requires (a) a cosine
+    * index and (b) the label stored as a PAYLOAD COLUMN of the cells table
+    * — at cluster scale labels live beside the vectors in the
+    * cell-partitioned parquet; joining a corpus-sized label table per
     * mining run would reintroduce the very shuffle this index removes.
     * Both the negatives and the `pos_cos` anchor see only probed cells:
     * nProbe = nCells is exactly the broadcast arm (the oracle identity
     * the embed_hard_negatives_ivf gate pins); smaller nProbe approximates
     * both, in the usual nProbe/nCells recall-for-scan tradeoff. Output
-    * contract == [[Negatives.hardNegatives]]. */
+    * contract, NULL-label guard included, == [[Negatives.hardNegatives]]. */
   def hardNegatives(queries: DataFrame, qId: String, qVec: String,
       qLabel: String, cLabel: String, k: Int, nProbe: Int): DataFrame = {
     require(metric == Algorithm.CosineSimilarity,
@@ -251,36 +210,8 @@ final class IvfIndex(
     require(cells.columns.contains(cLabel),
       s"index cells carry no '$cLabel' payload column — rebuild the index " +
         "from a corpus frame that includes the label")
-    require(k > 0, s"k must be positive, got $k")
-    val np = math.max(1, math.min(nProbe, nCells))
-    // qid-dedup with the label carried: same min-vector pick as
-    // dedupedQueries (struct ordering compares qv first), so the two
-    // arms can never select different vectors for a duplicated qid
-    val q = queries.select(col(qId).as("qid"), col(qVec).as("qv"),
-        col(qLabel).as("ql"))
-      .groupBy("qid").agg(min(struct(col("qv"), col("ql"))).as("_p"))
-      .select(col("qid"), col("_p.qv").as("qv"), col("_p.ql").as("ql"))
-    val probed = q.withColumn("_p", explode(cellRankExpr(np)))
-      .select(col("qid"), col("qv"), col("ql"), col("_p.c").as("cell"))
-    val scored = probed.join(cells, "cell")
-      .where(col("qid") =!= col("id"))
-      .withColumn("_cos", Similarity.cosineSimilarity(col("qv"), col("key")))
-    val pos = scored.where(col(cLabel) === col("ql"))
-      .groupBy("qid").agg(max(col("_cos")).as("pc"))
-    // bounded per-task fold over the probed match table — at the
-    // million-anchor scale this arm exists for, a window sort of
-    // |anchors|·nProbe·cellRows rows is the measured query-side cliff
-    // (ScaleJoin, SCALE.md round 13)
-    val negs = BoundedTopK.topK(
-      scored.where(col(cLabel) =!= col("ql"))
-        .select(col("qid"), col("id"), col("_cos")),
-      "qid", "id", "_cos", k)
-    negs.join(broadcast(pos), Seq("qid"), "left")
-      .select(col("qid"), col("cid"),
-        round(col("score"), 4).as("neg_cos"),
-        round(col("pc"), 4).as("pos_cos"),
-        col("rank"),
-        (round(col("score"), 4) < round(col("pc"), 4)).as("semi_hard"))
+    Negatives.mine(TwoPhaseTopK.cellProbe(this, queries, qId, qVec, nProbe,
+      Seq(col(qLabel).as("ql")), Seq(col(cLabel).as("cl"))), qLabel, cLabel, k)
   }
 
   /** SQ8 × IVF composition — the 100 TB top-k story stacked the right way:
@@ -288,105 +219,37 @@ final class IvfIndex(
     * cut) runs over the PROBED CELLS ONLY (this index's partition pruning),
     * so scanned bytes shrink multiplicatively — nProbe/nCells of the
     * corpus × ~4× fewer bytes per row — instead of the quantized
-    * brute-force arm's full-corpus coarse scan. Candidates leave the
-    * coarse pass as (qid, id) pairs; float vectors are only re-attached
-    * for the `shortlist`-deep rescore (ids-only discipline, same as the
-    * dedup joins). At nProbe = nCells the probed set is the whole corpus
-    * and the result is EXACTLY [[graft.functions.Quantize.quantizedTopKJoin]]
-    * (same coarse math, same tie-breaks — the embed_topk_quantized_ivf
+    * brute-force arm's full-corpus coarse scan. At nProbe = nCells the
+    * probed set is the whole corpus and the result is EXACTLY
+    * [[graft.functions.Quantize.quantizedTopKJoin]] (one operator,
+    * [[TwoPhaseTopK.rescored]], behind both — the embed_topk_quantized_ivf
     * oracle pins that identity); smaller nProbe compounds the IVF recall
     * tradeoff onto the quantization one. Cosine output contract ==
     * (qid, cid, cos, rank). At cluster scale the code columns live stored
     * beside the cell-partitioned table; here they project off the cached
     * cells (same values — int8Codes is deterministic). */
   def quantizedTopKJoin(queries: DataFrame, qId: String, qVec: String,
-      k: Int, nProbe: Int, shortlist: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.Quantize
-    require(k > 0, s"k must be > 0, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val np = math.max(1, math.min(nProbe, nCells))
-    val q0 = dedupedQueries(queries, qId, qVec) // quantized once per query
-    val (qmn, qmx) = Quantize.quantParams(col("qv"))
-    val probed = q0
-      .select(col("qid"), col("qv"), Quantize.int8Codes(col("qv")).as("qcodes"),
-        qmn.as("qmn"), qmx.as("qmx"))
-      .withColumn("_p", explode(cellRankExpr(np)))
-      .select(col("qid"), col("qcodes"), col("qmn"), col("qmx"),
-        col("_p.c").as("cell"))
-    // coarse: ONLY the code columns of the probed cells ride the join —
-    // the float vectors never touch this, the widest stage
-    val (cmn, cmx) = Quantize.quantParams(col("key"))
-    val codes = cells.select(col("cell"), col("id"),
-      Quantize.int8Codes(col("key")).as("ccodes"), cmn.as("cmn"), cmx.as("cmx"))
-    // both rankings go through the bounded fold ([[BoundedTopK]]) — the
-    // coarse stage is the widest table this operator ever builds
-    // (|q|·nProbe·cellRows rows) and must never be window-sorted
-    val coarse = probed.join(codes, "cell")
-      .select(col("qid"), col("id"), Quantize.coarseCosine(
-        col("qcodes"), col("qmn"), col("qmx"),
-        col("ccodes"), col("cmn"), col("cmx")).as("s_coarse"))
-    val short = BoundedTopK.topK(coarse, "qid", "id", "s_coarse", shortlist)
-      .select(col("qid"), col("cid").as("id"))
-    // rescore the shortlist only: float vectors by id (shortlist-bounded),
-    // query vectors by qid (broadcast-sized)
-    val exact = short
-      .join(cells.select(col("id"), col("key")), "id")
-      .join(broadcast(q0), "qid")
-      .select(col("qid"), col("id"),
-        Similarity.cosineSimilarity(col("qv"), col("key")).as("cos"))
-    BoundedTopK.topK(exact, "qid", "id", "cos", k)
-      .select(col("qid"), col("cid"),
-        round(col("score"), 4).as("cos"), col("rank"))
-  }
+      k: Int, nProbe: Int, shortlist: Int): DataFrame =
+    TwoPhaseTopK.rescored(TwoPhaseTopK.cellProbe(this, queries, qId, qVec,
+      nProbe), TwoPhaseTopK.sq8, k, shortlist)
 
   /** PQ × IVF composition (IVF-ADC, the layout of Jégou 2011 §IV): the
     * product-quantized coarse pass runs over the PROBED CELLS ONLY, so the
     * two byte-budget levers stack multiplicatively — nProbe/nCells of the
-    * corpus scanned × m ints per row instead of d floats. The query side
-    * precomputes its ADC lookup table ONCE per (query, probed cell) row
-    * before the cell join ([[PqCodebook.lutExpr]] — the asymmetric half);
-    * each matched corpus row costs m lookups. Candidates leave as
-    * (qid, id) pairs; float vectors are only re-attached for the
-    * `shortlist`-deep exact rescore (ids-only discipline). At
-    * nProbe = nCells the probed set is the whole corpus and the result is
-    * EXACTLY [[PqCodebook.topKJoin]] (same coarse math, same tie-breaks —
-    * the embed_topk_pq_ivf oracle pins that identity); smaller nProbe
-    * compounds the IVF recall tradeoff onto the codebook one. Output
-    * contract == (qid, cid, cos, rank). At cluster scale the code column
-    * lives stored beside the cell-partitioned table (encode at ingest);
-    * here it projects off the cached cells (same values — encodeExpr is
-    * deterministic). */
+    * corpus scanned × m ints per row instead of d floats. At nProbe =
+    * nCells the probed set is the whole corpus and the result is EXACTLY
+    * [[PqCodebook.topKJoin]] (one operator, [[TwoPhaseTopK.rescored]],
+    * behind both — the embed_topk_pq_ivf oracle pins that identity);
+    * smaller nProbe compounds the IVF recall tradeoff onto the codebook
+    * one. Output contract == (qid, cid, cos, rank). At cluster scale the
+    * code column lives stored beside the cell-partitioned table (encode at
+    * ingest); here it projects off the cached cells (same values —
+    * encodeExpr is deterministic). */
   def pqTopKJoin(queries: DataFrame, qId: String, qVec: String,
       k: Int, nProbe: Int, shortlist: Int,
-      cb: PqCodebook): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k > 0, s"k must be > 0, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val np = math.max(1, math.min(nProbe, nCells))
-    val q0 = dedupedQueries(queries, qId, qVec)
-    val probed = q0
-      .select(col("qid"), col("qv"), cb.lutExpr(col("qv")).as("luts"),
-        graft.functions.Similarity.hof.l2Norm(col("qv")).as("qn"))
-      .withColumn("_p", explode(cellRankExpr(np)))
-      .select(col("qid"), col("luts"), col("qn"), col("_p.c").as("cell"))
-    val codes = cells.select(col("cell"), col("id"),
-      cb.encodeExpr(col("key")).as("codes"))
-    // bounded fold for both rankings — see quantizedTopKJoin's note
-    val coarse = probed.join(codes, "cell")
-      .select(col("qid"), col("id"),
-        cb.adcCosine(col("luts"), col("qn"), col("codes")).as("s_coarse"))
-    val short = BoundedTopK.topK(coarse, "qid", "id", "s_coarse", shortlist)
-      .select(col("qid"), col("cid").as("id"))
-    val exact = short
-      .join(cells.select(col("id"), col("key")), "id")
-      .join(broadcast(q0), "qid")
-      .select(col("qid"), col("id"), graft.functions.Similarity
-        .cosineSimilarity(col("qv"), col("key")).as("cos"))
-    BoundedTopK.topK(exact, "qid", "id", "cos", k)
-      .select(col("qid"), col("cid"),
-        round(col("score"), 4).as("cos"), col("rank"))
-  }
+      cb: PqCodebook): DataFrame =
+    TwoPhaseTopK.rescored(TwoPhaseTopK.cellProbe(this, queries, qId, qVec,
+      nProbe), TwoPhaseTopK.pq(cb), k, shortlist)
 
   /** Top-n over the probed cells only: `cell IN probes` prunes partitions,
     * then exact scoring + TakeOrderedAndProject. Returns (id, key, sim). */
@@ -404,10 +267,28 @@ final class IvfIndex(
 
 object IvfIndex {
 
-  /** Deterministic k-means cell assignment: distances to every centroid as
-    * one array expression, argmin via array_position(min) — first match
-    * breaks ties toward the lowest cell index. (A when-chain fold would
-    * duplicate its accumulator per centroid — exponential codegen.) */
+  /** The n nearest centroids of a vector column, as array<struct<d, c>>:
+    * every centroid distance comes out of ONE native kernel call
+    * ([[org.apache.spark.sql.graftbridge.CentroidDists]] — the
+    * per-centroid-kernel-call array it replaces blew codegen's method
+    * budget at large nCells and ran interpreted, the assignCell flaw on
+    * the query side), then a k-element struct sort ranks them — tiny,
+    * scalar, and ordered (d asc, c asc). This is the both-sides-large
+    * routing path: at 1M+ query rows the distance work is the corpus-scale
+    * cost, the sort is 256 scalars/row. The IVF cell probe
+    * ([[TwoPhaseTopK.cellProbe]]) and the routed index's query routing and
+    * replica assignment all rank through this one expression, so their
+    * routing can never diverge. */
+  private[ann] def cellRank(vec: Column, centroids: Array[Array[Float]],
+      n: Int): Column = {
+    import org.apache.spark.sql.graftbridge.{CentroidDists, ColumnBridge}
+    val dists = ColumnBridge.column(CentroidDists(
+      ColumnBridge.expression(vec), centroids.flatten, centroids.length))
+    slice(array_sort(zip_with(dists,
+      sequence(lit(0), lit(centroids.length - 1)),
+      (d, c) => struct(d.as("d"), c.as("c")))), 1, n)
+  }
+
   /** Nearest-centroid index over the `key` column as ONE native kernel
     * call: [[org.apache.spark.sql.graftbridge.PqEncode]] with m = 1,
     * ksub = nCells IS the argmin over the centroid table (strict-< first

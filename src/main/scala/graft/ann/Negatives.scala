@@ -1,7 +1,9 @@
 package graft.ann
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.functions.Similarity
 
 /**
  * Hard-negative mining for contrastive training (the DPR / FaceNet /
@@ -20,10 +22,9 @@ import org.apache.spark.sql.functions._
  * matrix. The negatives arm folds scored pairs into bounded per-task
  * heaps ([[BoundedTopK]] — shuffle carries ≤ tasks × queries × k rows,
  * never the product); the positives arm is a map-side-combined max per
- * qid (G rows out). Both-sides-large: route the negatives arm through the IVF index
- * ([[Ivf.topKJoin]]) with the label filter applied inside probed cells and
- * k widened to survive the filter — same composition as the quantized
- * arms; the anchor max is unchanged (it is an aggregation, not a top-k).
+ * qid (G rows out). Both-sides-large: [[IvfIndex.hardNegatives]] takes its
+ * pairs from the IVF cell probe instead of the broadcast cross-join
+ * ([[TwoPhaseTopK]]'s two generators) and runs the same miner tail.
  *
  * `semi_hard` compares ROUNDED (4 dp) cosines: the flag must be decided on
  * the same numbers the output reports (and the oracle replays), not on
@@ -43,30 +44,37 @@ object Negatives {
     * corpusDiff/writePartitioned discipline): both arms filter on label
     * equality, so a NULL-labeled row would silently vanish from the
     * output — neither a negative nor a positive — which is row loss, not
-    * semantics. Assign real labels (or filter explicitly) first. */
+    * semantics. Assign real labels (or filter explicitly) first.
+    *
+    * Query ids must be unique: the broadcast arm does not deduplicate
+    * queries, so a duplicated qid ranks the same cid twice. */
   def hardNegatives(queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, qLabel: String,
-      cId: String, cVec: String, cLabel: String, k: Int): DataFrame = {
+      cId: String, cVec: String, cLabel: String, k: Int): DataFrame =
+    mine(TwoPhaseTopK.broadcastPairs(queries, qId, qVec, corpus, cId, cVec,
+      Seq(col(qLabel).as("ql")), Seq(col(cLabel).as("cl"))), qLabel, cLabel, k)
+
+  /** The miner tail over any [[TwoPhaseTopK.Candidates]] carrying labels
+    * `ql` / `cl` (named `qLabel` / `cLabel` in the caller's frames, for the
+    * error message): self-pairs dropped, the anchor max over same-label
+    * pairs (partial max map-side — the shuffle carries one row per query),
+    * the negatives through the bounded per-task fold over different-label
+    * pairs (never a window sort of the pair table — the measured cliff is
+    * in SCALE.md), the anchor re-joined broadcast, `semi_hard` on the
+    * rounded cosines. Both arms ([[hardNegatives]], [[IvfIndex
+    * .hardNegatives]]) run this, so both get the NULL-label guard. */
+  private[ann] def mine(cands: TwoPhaseTopK.Candidates, qLabel: String,
+      cLabel: String, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val q = broadcast(queries.select(
-      col(qId).as("qid"), col(qVec).as("qv"),
-      requireLabel(qLabel, "query").as("ql")))
-    val c = corpus.select(
-      col(cId).as("cid"), col(cVec).as("cv"),
-      requireLabel(cLabel, "corpus").as("cl"))
-    val scored = q.crossJoin(c)
+    val scored = cands.pairs(
+        Seq(col("qv"), requireLabel(col("ql"), qLabel, "query").as("ql")),
+        Seq(col("cv"), requireLabel(col("cl"), cLabel, "corpus").as("cl")))
       .where(col("qid") =!= col("cid"))
-      .withColumn("cos", graft.dedup.Dedup.cosine(col("qv"), col("cv")))
-    // positive anchor: max same-label cosine — partial max map-side, the
-    // shuffle carries one row per query
+      .withColumn("cos", Similarity.cosineSimilarity(col("qv"), col("cv")))
     val pos = scored.where(col("cl") === col("ql"))
       .groupBy("qid").agg(max(col("cos")).as("pc"))
-    // hard negatives: per-query top-k over different-label rows, through
-    // the bounded per-task fold — never a window sort of the broadcast
-    // product (graft.ann.BoundedTopK; the measured cliff is in SCALE.md)
     val negs = BoundedTopK.topK(
-      scored.where(col("cl") =!= col("ql"))
-        .select(col("qid"), col("cid"), col("cos")),
+      scored.where(col("cl") =!= col("ql")).select("qid", "cid", "cos"),
       "qid", "cid", "cos", k)
     negs.join(broadcast(pos), Seq("qid"), "left")
       .select(col("qid"), col("cid"),
@@ -79,13 +87,10 @@ object Negatives {
   /** In-plan NULL-label guard: the label value, or raise_error on NULL.
     * Riding inside the projected column (not a dropped check column, which
     * the optimizer would prune away) guarantees the probe runs exactly
-    * where the label is read. Shared by the broadcast arm above and
-    * [[IvfIndex.hardNegatives]]. */
-  private[ann] def requireLabel(labelCol: String, side: String) = {
-    val c = col(labelCol)
+    * where the label is read. */
+  private def requireLabel(c: Column, labelCol: String, side: String): Column =
     when(c.isNull, raise_error(lit(
       s"hardNegatives: NULL $side label ($labelCol) — a NULL-labeled row " +
         "would silently vanish from both arms; assign or filter first")))
       .otherwise(c)
-  }
 }

@@ -160,51 +160,22 @@ final class PqCodebook(
       }
     }
 
-  /** One-argument form (tests, ad-hoc scoring): builds the lut inline, so
-    * the table rebuild is paid PER SCORED ROW — use [[lutExpr]] +
-    * [[adcCosine]] across a join. */
-  def coarseCosine(qVec: Column, codes: Column): Column =
-    adcCosine(lutExpr(qVec), Similarity.hof.l2Norm(qVec), codes)
-
   /** PQ two-phase top-k similarity join (output contract ==
     * [[graft.dedup.Dedup.topKJoin]]: (qid, cid, cos, rank)): the coarse
     * ADC pass ranks the corpus per query over the CODE column only — at
     * scale that stage scans m ints per row instead of d floats, the PQ IO
     * story — a `shortlist`-deep cut survives, and float vectors are only
     * re-attached (by id — the ids-only discipline) for the exact cosine
-    * rescore. Queries broadcast (the small-queries arm, like
-    * [[graft.functions.Quantize.quantizedTopKJoin]]); a both-sides-large
-    * caller routes through [[IvfIndex.topKJoin]] cells first. */
+    * rescore. Queries broadcast (the small-queries arm); a both-sides-large
+    * caller routes through IVF cells instead ([[IvfIndex.pqTopKJoin]] —
+    * the same operator, [[TwoPhaseTopK.rescored]], over the cell-probe
+    * generator). Query ids must be unique: the broadcast arm does not
+    * deduplicate queries, so a duplicated qid ranks the same cid twice. */
   def topKJoin(queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
-      k: Int, shortlist: Int): DataFrame = {
-    require(k > 0, s"k must be > 0, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val q = queries.select(col(qId).as("qid"), col(qVec).as("qv"))
-    // lut + norm are computed ONCE per query row, before the broadcast —
-    // the asymmetric half of ADC (the broadcast materializes them, so the
-    // scan side never re-derives the table)
-    val qPrepped = q.select(col("qid"), lutExpr(col("qv")).as("luts"),
-      Similarity.hof.l2Norm(col("qv")).as("qn"))
-    // the coarse side carries (cid, codes) ONLY — no float vectors
-    val codes = corpus.select(col(cId).as("cid"),
-      encodeExpr(col(cVec)).as("codes"))
-    // rankings go through the bounded per-task fold ([[BoundedTopK]]):
-    // the coarse table is |q|·|corpus| rows — the widest stage any join
-    // in this family builds — and must never be window-sorted
-    val coarse = broadcast(qPrepped).crossJoin(codes)
-      .select(col("qid"), col("cid"),
-        adcCosine(col("luts"), col("qn"), col("codes")).as("s_coarse"))
-    val short = BoundedTopK.topK(coarse, "qid", "cid", "s_coarse", shortlist)
-      .select("qid", "cid")
-    val exact = short
-      .join(corpus.select(col(cId).as("cid"), col(cVec).as("cv")), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("cid"),
-        Similarity.cosineSimilarity(col("qv"), col("cv")).as("cos"))
-    BoundedTopK.topK(exact, "qid", "cid", "cos", k)
-      .select(col("qid"), col("cid"), round(col("score"), 4).as("cos"), col("rank"))
-  }
+      k: Int, shortlist: Int): DataFrame =
+    TwoPhaseTopK.rescored(TwoPhaseTopK.broadcastPairs(queries, qId, qVec,
+      corpus, cId, cVec), TwoPhaseTopK.pq(this), k, shortlist)
 
   /** Compact serialized form + executor-level dedup: a trained codebook
     * rides inside EVERY shard object that stores PQ codes (the shard

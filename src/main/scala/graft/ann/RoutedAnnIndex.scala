@@ -201,7 +201,6 @@ final class RoutedAnnIndex(
   def topKJoin(queries: DataFrame, qId: String, qVec: String, k: Int,
       probes: Int, filter: IdFilter = null): DataFrame = {
 
-    import org.apache.spark.sql.graftbridge.{CentroidDists, ColumnBridge}
     val spark = queries.sparkSession
     // sharp-filter cutover: known accept cardinality below the measured
     // fraction of LIVE LOGICAL rows → exact slice scan at all shards.
@@ -226,11 +225,7 @@ final class RoutedAnnIndex(
     val q = queries.select(col(qId).cast("long").as("qid"),
         col(qVec).cast("array<float>").as("qv"))
       .groupBy("qid").agg(min(col("qv")).as("qv"))
-    val dists = ColumnBridge.column(CentroidDists(
-      ColumnBridge.expression(col("qv")), centroids.flatten, numShards))
-    val ranked = slice(array_sort(zip_with(dists,
-      sequence(lit(0), lit(numShards - 1)),
-      (d, c) => struct(d.as("d"), c.as("c")))), 1, p)
+    val ranked = IvfIndex.cellRank(col("qv"), centroids, p)
     val routed = q.select(explode(ranked).as("_p"), col("qid"), col("qv"))
       .select(col("_p.c").cast("int").as("_s"), col("qid"), col("qv"))
     val byShard = routed
@@ -251,14 +246,13 @@ final class RoutedAnnIndex(
           case None => Iterator.empty
           case Some(shard) if scanSlice =>
             // exact scan of the accepted slice: filter ONCE per shard per
-            // batch (accept tests are cheap; distances are paid only on
-            // accepted rows), then a bounded k-heap per query — the
-            // calibrate ground-truth pattern. Scores are the stored form
-            // (exported floats — exact under f32; dequantized/decoded
-            // under SQ8/PQ, restored downstream by the rescore, exactly
-            // like graph scores)
-            val rows = RoutedAnnIndex.rowsOf(shard)
-              .filter(r => accept == null || accept(r._1)).toArray
+            // batch, on the id BEFORE decoding (rejected rows are never
+            // exported; distances are paid only on accepted rows), then a
+            // bounded k-heap per query — the calibrate ground-truth
+            // pattern. Scores are the stored form (exported floats — exact
+            // under f32; dequantized/decoded under SQ8/PQ, restored
+            // downstream by the rescore, exactly like graph scores)
+            val rows = RoutedAnnIndex.acceptedRowsOf(shard, accept).toArray
             val ord = Ordering.by[(Double, Long), (Double, Long)] {
               case (c, id) => (-c, id)
             }
@@ -1685,17 +1679,11 @@ object RoutedAnnIndex {
         df.select(IvfIndex.assignCell(col("key"), centroids).cast("int").as("_s"),
           col("id"), col("key"))
       else {
-        // rank every centroid per row (one native CentroidDists pass —
-        // the cellRankExpr shape), keep the nearest maxReplicas whose
+        // rank every centroid per row, keep the nearest maxReplicas whose
         // SQUARED distance is within (1+eps)² of the nearest's
-        import org.apache.spark.sql.graftbridge.{CentroidDists, ColumnBridge}
         import graft.functions.GraftFunctions.bind
         val f = (1.0 + replicationEps) * (1.0 + replicationEps)
-        val dists = ColumnBridge.column(CentroidDists(
-          ColumnBridge.expression(col("key")), centroids.flatten, numShards))
-        val ranked = slice(array_sort(zip_with(dists,
-          sequence(lit(0), lit(numShards - 1)),
-          (d, c) => struct(d.as("d"), c.as("c")))), 1, maxReplicas)
+        val ranked = IvfIndex.cellRank(col("key"), centroids, maxReplicas)
         val kept = bind(ranked) { r =>
           filter(r, x =>
             x.getField("d") <= element_at(r, 1).getField("d") * lit(f))

@@ -73,7 +73,9 @@ object Quantize {
     * cosine over the DEQUANTIZED int8 codes ranks the corpus per query, a
     * `shortlist`-deep cut survives, and only the shortlist is RESCORED with
     * the exact float cosine (output contract == [[graft.dedup.Dedup
-    * .topKJoin]]: (qid, cid, cos, rank)).
+    * .topKJoin]]: (qid, cid, cos, rank)). Queries broadcast against the
+    * whole corpus; the operator is [[graft.ann.TwoPhaseTopK.rescored]],
+    * shared with the IVF arm ([[graft.ann.IvfIndex.quantizedTopKJoin]]).
     *
     * Why this is the 100 TB arm of the brute-force join: the coarse pass
     * reads 1 byte/dimension + two doubles instead of 4 bytes/dimension —
@@ -87,38 +89,15 @@ object Quantize {
     * corpus size` degrades to exactly the brute-force result (QuantizeSpec
     * pins that identity); practical settings (e.g. 8·k) trade quantization-
     * bounded recall loss for the IO cut. Both phases are deterministic
-    * (fixed-order double math, ties by cid) — an engine-portable pipeline. */
+    * (fixed-order double math, ties by cid) — an engine-portable pipeline.
+    *
+    * Query ids must be unique: the broadcast arm does not deduplicate
+    * queries, so a duplicated qid ranks the same cid twice. */
   def quantizedTopKJoin(queries: DataFrame, corpus: DataFrame,
       qId: String, qVec: String, cId: String, cVec: String,
       k: Int, shortlist: Int): DataFrame = {
-    require(k > 0, s"k must be > 0, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    def quantized(df: DataFrame, id: String, vec: String, p: String): DataFrame = {
-      val (mn, mx) = quantParams(col(vec))
-      df.select(col(id).as(s"${p}id"), col(vec).as(s"${p}v"),
-        int8Codes(col(vec)).as(s"${p}codes"), mn.as(s"${p}mn"), mx.as(s"${p}mx"))
-    }
-    val q = quantized(queries, qId, qVec, "q")
-    val c = quantized(corpus, cId, cVec, "c")
-    // the coarse pass carries CODES ONLY across the |q|·|corpus| cross
-    // product (float vectors re-attach for the shortlist rescore — they
-    // used to ride the widest stage), and both rankings go through the
-    // bounded per-task fold ([[graft.ann.BoundedTopK]]) instead of a
-    // window sort of the full cross product
-    val coarse = broadcast(q.drop("qv")).crossJoin(c.drop("cv"))
-      .select(col("qid"), col("cid"), coarseCosine(
-        col("qcodes"), col("qmn"), col("qmx"),
-        col("ccodes"), col("cmn"), col("cmx")).as("s_coarse"))
-    val short = graft.ann.BoundedTopK.topK(coarse, "qid", "cid", "s_coarse",
-        shortlist)
-      .select("qid", "cid")
-    val exact = short
-      .join(corpus.select(col(cId).as("cid"), col(cVec).as("cv")), "cid")
-      .join(broadcast(queries.select(col(qId).as("qid"), col(qVec).as("qv"))),
-        "qid")
-      .select(col("qid"), col("cid"),
-        Similarity.cosineSimilarity(col("qv"), col("cv")).as("cos"))
-    graft.ann.BoundedTopK.topK(exact, "qid", "cid", "cos", k)
-      .select(col("qid"), col("cid"), round(col("score"), 4).as("cos"), col("rank"))
+    import graft.ann.TwoPhaseTopK
+    TwoPhaseTopK.rescored(TwoPhaseTopK.broadcastPairs(queries, qId, qVec,
+      corpus, cId, cVec), TwoPhaseTopK.sq8, k, shortlist)
   }
 }

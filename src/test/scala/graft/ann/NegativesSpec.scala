@@ -159,6 +159,26 @@ class NegativesSpec extends AnyFunSuite {
     // all-labeled frames are unaffected by the guard
     assert(Negatives.hardNegatives(good, good,
       "id", "vec", "label", "id", "vec", "label", 2).count() > 0)
+    // the IVF arm: NULL in the cells' label payload, then in the queries
+    val keyed = bad.withColumnRenamed("vec", "key")
+    val ivfBad = IvfIndex.build(keyed, 1, iters = 1,
+      metric = graft.types.Algorithm.CosineSimilarity)
+    try {
+      val e3 = intercept[Exception] {
+        ivfBad.hardNegatives(good, "id", "vec", "label", "label", 2, 1)
+          .collect()
+      }
+      assert(chain(e3).contains("NULL corpus label"), chain(e3))
+    } finally ivfBad.unpersist()
+    val ivfGood = IvfIndex.build(keyed.where($"label".isNotNull), 1,
+      iters = 1, metric = graft.types.Algorithm.CosineSimilarity)
+    try {
+      val e4 = intercept[Exception] {
+        ivfGood.hardNegatives(bad, "id", "vec", "label", "label", 2, 1)
+          .collect()
+      }
+      assert(chain(e4).contains("NULL query label"), chain(e4))
+    } finally ivfGood.unpersist()
   }
 
   test("IVF arm refuses a non-cosine index and a label-free cells table") {

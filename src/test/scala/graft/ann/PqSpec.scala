@@ -107,6 +107,22 @@ class PqSpec extends AnyFunSuite {
     } finally ivf.unpersist()
   }
 
+  test("IVF-SQ8: nProbe = nCells is exactly the SQ8 brute-force arm") {
+    val ivf = IvfIndex.build(df, nCells = 8, iters = 2)
+    try {
+      val queries = (0 until 10).map(qi => ((8000 + qi).toLong, gen((8000 + qi).toLong)))
+      val qDf = queries.toDF("qid", "qv")
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+      val exhaustive = rows(ivf.quantizedTopKJoin(qDf, "qid", "qv",
+        k = 10, nProbe = 8, shortlist = 40))
+      val brute = rows(graft.functions.Quantize.quantizedTopKJoin(qDf, df,
+        "qid", "qv", "id", "key", k = 10, shortlist = 40))
+      assert(exhaustive.size == 100)
+      assert(exhaustive == brute, "nProbe = nCells must equal the SQ8 brute-force arm")
+    } finally ivf.unpersist()
+  }
+
   test("artifact round-trip is bit-identical; stale stamp refuses to load") {
     val cb = PqCodebook.train(df, m = 4, ksub = 8, iters = 2)
     val dir = java.nio.file.Files.createTempDirectory("pq-artifact").toString
